@@ -523,7 +523,7 @@ object OperatorGates5 {
         |GROUP BY lang, len(word) ORDER BY lang, wlen""".stripMargin,
 
     "q_observed_metrics" ->
-      """SELECT 'high_watermark' AS metric, max(event_id) AS value FROM events WHERE value <= 150
+      """SELECT 'high_watermark' AS metric, max(event_id) AS value FROM events
         |UNION ALL SELECT 'listener_rows_out', count(*) FROM events WHERE value <= 150
         |UNION ALL SELECT 'published_runs', CAST(1 AS BIGINT)
         |UNION ALL SELECT 'quarantined', count(*) FROM events WHERE value > 150

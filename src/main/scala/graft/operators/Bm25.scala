@@ -29,13 +29,19 @@ import graft.functions.Text
   * expression tree on both engines, bit-reproducible IEEE — floored to
   * an integer, so per-(query, doc) scores are order-free integer sums.
   *
-  * 100 TB shape: df/dl/avgdl are map-side-combined hash aggregations;
-  * the scoring join is (query terms) ⋈ (corpus postings) on token — a
-  * shuffle equi-join whose skew is bounded by `maxDf` (stopword
-  * posting lists are both the skew risk and the least informative:
-  * idf → 0 as df → N, so capping df drops almost-zero-weight terms
-  * first, the standard impact-ordered-index pruning move). Top-k is a
-  * per-query rank window over candidates, k-bounded output.
+  * Shape: scoring reads the index twice. One pass is the corpus stats
+  * (N, avgdl), a map-side-combined one-row aggregation. The other
+  * left-semi-joins the postings against the broadcast set of distinct
+  * query tokens, so only the query terms' posting lists (the
+  * candidates) survive the scan; df is then a count per token over
+  * the candidates, exact because postings hold one row per (doc,
+  * token). No aggregation ever runs over the full vocabulary, and no
+  * shuffle carries postings of terms no query asks about. The
+  * candidate shuffle's skew is bounded by `maxDf` (stopword posting
+  * lists are both the skew risk and the least informative: idf → 0
+  * as df → N, so capping df drops almost-zero-weight terms first, the
+  * standard impact-ordered-index pruning move). Top-k is a per-query
+  * rank window over scored docs, k-bounded output.
   *
   * Reference seam: gobblin has no ranked retrieval; this generalizes
   * the `q_inverted_index` decontamination substrate
@@ -57,9 +63,9 @@ object Bm25 {
 
   /** The persistable index: one row per (doc, distinct token) with the
     * term frequency `tf` and document length `dl` — document-granular,
-    * so it supports incremental maintenance ([[mergeIndex]]); df/N/
-    * avgdl are cheap derived aggregations at query time (vocabulary-
-    * and corpus-count-sized, never another corpus scan).
+    * so it supports incremental maintenance ([[mergeIndex]]). N/avgdl
+    * are derived at query time in one stats pass, df in the candidate
+    * pass over the query terms' postings only (see the object doc).
     */
   def index(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
     postings(corpus, idCol, textCol)
@@ -160,7 +166,7 @@ object Bm25 {
       k1: Double = 1.2, b: Double = 0.75, maxDf: Long = Long.MaxValue,
       excludeSelf: Boolean = true): DataFrame =
     // materialize the freshly built postings once: topKFromIndex scans
-    // its index three times (corpus stats, df, scoring join), and each
+    // its index twice (corpus stats, query-term candidates), and each
     // scan of a FRESH index re-runs the tokenize+explode+groupBy chain
     // — the dominant cost, re-shuffling every exploded token per pass.
     // A lazy localCheckpoint pays one aggregated-postings
@@ -194,11 +200,14 @@ object Bm25 {
     val qterms = queries.select(col(qIdCol).as("query_id"),
         explode(array_distinct(slice(Text.tokens(coalesce(col(qTextCol), lit(""))), 1, qTerms)))
           .as("token"))
-    val df = post.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    // candidates: only the query terms' posting lists, df counted over
+    // them (one posting per (doc, token), so the count is the exact df)
+    val cand = post
+      .join(broadcast(qterms.select(col("token")).distinct()), Seq("token"), "left_semi")
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
       .filter(col("df") <= lit(maxDf))
     val scored = qterms
-      .join(df, Seq("token"))
-      .join(post, Seq("token"))
+      .join(cand, Seq("token"))
       .join(broadcast(stats))
       .filter(if (excludeSelf) col("doc_id") =!= col("query_id") else lit(true))
       .withColumn("contrib",

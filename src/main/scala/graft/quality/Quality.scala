@@ -43,9 +43,13 @@ object Quality {
     * scan; callers forking both branches to sinks should persist().
     */
   def checkRows(df: DataFrame, policies: Seq[RowPolicy]): CheckedFrame = {
+    // a predicate that evaluates to NULL FAILS (as the Optional count
+    // already treats it): it drops the row AND quarantines it, never
+    // silently losing it from both outputs
+    def passes(p: RowPolicy): Column = coalesce(p.passes, lit(false))
     val dropping = policies.filter(_.policyType != Optional)
     val optional = policies.filter(_.policyType == Optional)
-    val passPred = dropping.map(_.passes).reduceOption(_ && _).getOrElse(lit(true))
+    val passPred = dropping.map(passes).reduceOption(_ && _).getOrElse(lit(true))
     val (observed, observation) =
       if (optional.isEmpty) (df, None)
       else {
@@ -57,7 +61,7 @@ object Quality {
     val errPolicies = policies.filter(_.policyType == ErrFile)
     val quarantined =
       if (errPolicies.isEmpty) None
-      else Some(df.filter(errPolicies.map(p => !p.passes).reduce(_ || _)))
+      else Some(df.filter(errPolicies.map(p => !passes(p)).reduce(_ || _)))
     CheckedFrame(passed, quarantined, observation)
   }
 

@@ -55,7 +55,14 @@ object JobRunner {
     // 1. plan: incremental range from the committed watermark
     val low = lowWatermark(store, job)
     val source = read(spark)
+    // the high watermark is the max over every row READ, as the
+    // extractor watermark is: rows the converters filter or the
+    // policies quarantine above the last published row must not be
+    // re-read (and re-quarantined) by every later run. It rides
+    // whichever write runs first (quarantine or staged), one pass.
+    val wmObs = org.apache.spark.sql.Observation()
     val ranged = low.fold(source)(wm => source.filter(col(watermarkCol) > lit(wm)))
+      .observe(wmObs, max(col(watermarkCol)).as("high_wm"))
 
     // 2-3. converter chain + row policies
     val transformed = ops.foldLeft(ranged)((df, op) => op(df))
@@ -77,13 +84,10 @@ object JobRunner {
     // 4. staged write with observed metrics (single pass — Observation
     // attaches to the write action's execution)
     val obs = org.apache.spark.sql.Observation()
-    val observed = checked.passed.observe(obs,
-      count(lit(1)).as("rows"),
-      max(col(watermarkCol)).as("high_wm"))
+    val observed = checked.passed.observe(obs, count(lit(1)).as("rows"))
     publisher.writeStaged(observed, spec)
-    val metricsMap = obs.get
-    val rows = metricsMap.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val highWm = metricsMap.get("high_wm").flatMap(Option(_)).map {
+    val rows = obs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val highWm = wmObs.get.get("high_wm").flatMap(Option(_)).map {
       case l: Long => l
       case i: Int => i.toLong
       case other => other.toString.toLong

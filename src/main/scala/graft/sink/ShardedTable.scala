@@ -2,8 +2,9 @@ package graft.sink
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.state.FsStateStore
 
@@ -54,6 +55,34 @@ import graft.state.FsStateStore
   * directories needs no partition-discovery and a partition-pruned
   * read ([[readPartitions]]) is a manifest lookup, not a listing.
   *
+  * A commit writes ONE data file per touched partition: the write
+  * rebalances on `_part` first, so each partition's rows reach a
+  * single task instead of every task writing a file for every
+  * partition it holds (with AQE on, an oversized partition is still
+  * split into several files). Untouched partitions carry over with
+  * their files, so a version's file count stays at the partition
+  * count instead of compounding epoch over epoch.
+  *
+  * Manifest record keys:
+  * {{{
+  *   p:<part>            partition -> data dir
+  *   zmin:/zmax:<part>:<col>, ztyp:<col>   zone maps (see [[commit]])
+  *   schema:             the written Spark schema (JSON); reads pass it
+  *                       to spark.read.schema, so opening a version runs
+  *                       no schema-inference job. Records written
+  *                       without it fall back to inference.
+  *   m:<key>             per-commit user metadata
+  *   base: chain: del:<part>   delta-record links (see `resolved`)
+  * }}}
+  *
+  * Single writer: one instance memoises the manifest records it has
+  * read or written and never re-reads them. That is safe because a
+  * committed record is immutable, commits to one table are serialized
+  * (the incremental jobs hold a JobLock around each epoch), and each
+  * epoch constructs a fresh instance. An instance must not be kept
+  * across commits made by ANOTHER instance or process: it would
+  * serve that writer's rewritten records (expireVersions) stale.
+  *
   * Contract: partition values must render to filesystem-safe strings
   * (ints in practice — IVF list ids, doc-hash shards) and be non-null.
   */
@@ -77,13 +106,11 @@ final class ShardedTable(val root: String, val partCol: String,
       Some(key.drop(5).takeWhile(_ != ':'))
     else None
 
-  // Per-instance memo of manifest records and their resolved content.
-  // Safe: a committed vNNNNN record is immutable except for
-  // expireVersions' resolution-EQUIVALENT rewrite (which this instance
-  // reflects below), commits are serialized by the callers' JobLock,
-  // and each incremental epoch constructs a fresh instance anyway. The
-  // win is per-commit metadata IO: resolving a delta chain re-read up
-  // to ChainLimit JSON files per lookup — several lookups per epoch
+  // Per-instance memo of manifest records and their resolved content
+  // (safe under the single-writer assumption in the class doc;
+  // expireVersions' resolution-equivalent rewrite is reflected below).
+  // The win is per-commit metadata IO: resolving a delta chain re-read
+  // up to ChainLimit JSON files per lookup — several lookups per epoch
   // (watermark read, touched-partition read, commit carry-over) — and
   // on an object store each read is a round trip.
   private val rawCache =
@@ -201,7 +228,9 @@ final class ShardedTable(val root: String, val partCol: String,
       full: Boolean = false, statsCols: Seq[String] = Nil): Long = {
     val id = java.util.UUID.randomUUID().toString
     val dataDir = s"$root/data/$id"
+    // rebalance on _part: one writer task (so one file) per partition
     df.withColumn("_part", col(partCol).cast("string"))
+      .hint("rebalance", col("_part"))
       .write.partitionBy("_part").mode("overwrite").parquet(dataDir)
     val fs = new Path(root).getFileSystem(conf)
     val staged = fs.listStatus(new Path(dataDir))
@@ -289,7 +318,8 @@ final class ShardedTable(val root: String, val partCol: String,
       staged.map { case (k, d) => s"p:$k" -> d } ++
         zoneEntries ++ prevZtyp.filterNot { case (k, _) =>
           zoneEntries.contains(k) } ++
-        userMeta.map { case (k, v) => s"m:$k" -> v }
+        userMeta.map { case (k, v) => s"m:$k" -> v } +
+        ("schema:" -> df.schema.json)
     // a delta record is O(touched): tombstone every touched partition
     // (masking its base dirs AND stats), lay this commit's entries on
     // top, link the base. Every ChainLimit deltas the chain COMPACTS
@@ -323,8 +353,16 @@ final class ShardedTable(val root: String, val partCol: String,
   def read(spark: SparkSession, version: Long): DataFrame = {
     val dirs = manifest(version).values.toSeq.sorted
     require(dirs.nonEmpty, s"version $version of $root has no partitions")
-    spark.read.parquet(dirs: _*)
+    reader(spark, version).parquet(dirs: _*)
   }
+
+  /** A parquet reader carrying `version`'s recorded schema, so the
+    * scan needs no inference job; records from before `schema:` was
+    * recorded infer as before.
+    */
+  private def reader(spark: SparkSession, version: Long): DataFrameReader =
+    resolved(version).get("schema:").fold(spark.read)(s =>
+      spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
 
   def readCurrent(spark: SparkSession): DataFrame =
     read(spark, currentVersion.getOrElse(
@@ -348,8 +386,8 @@ final class ShardedTable(val root: String, val partCol: String,
       // partitions at all cannot answer a schemaful empty read
       val all = m.values.toSeq.sorted
       require(all.nonEmpty, s"version $v of $root has no partitions")
-      spark.read.parquet(all.head).limit(0)
-    } else spark.read.parquet(dirs: _*)
+      reader(spark, v).parquet(all.head).limit(0)
+    } else reader(spark, v).parquet(dirs: _*)
   }
 
   /** Zone-map-pruned range read: open only partitions whose committed

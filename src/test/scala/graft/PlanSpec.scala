@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+
 /** Plan-quality regression guard: the physical plans the engine is
   * designed around must survive refactors — filters/projections pushed
   * to the parquet scan, dims broadcast, purges as broadcast anti-joins.
@@ -272,6 +274,53 @@ class PlanSpec extends SparkSpec {
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1)
     assert(p.contains("partial_count"), "postings lost map-side partial agg")
     assert(p.contains("WindowGroupLimit"), "top-k must push before full sort")
+  }
+
+  /** BM25 df shape: df is a per-token window over the candidates the
+    * left-semi join with the broadcast query tokens lets through, and
+    * no aggregate is keyed by token alone (the full-vocabulary df).
+    * Returns the leaves under the semi join's index side.
+    */
+  private def candidateScan(name: String): Seq[SparkPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    spark.catalog.clearCache()
+    val sp = SparkEntry.queries(name)(spark, sf()).queryExecution.sparkPlan
+    def names(es: Seq[Expression]) =
+      es.collect { case a: Attribute => a.name }
+    val dfWindows = sp.collect {
+      case w: WindowExec if names(w.partitionSpec) == Seq("token") => w
+    }
+    assert(dfWindows.size == 1, s"expected one per-token df window:\n$sp")
+    val semi = dfWindows.head.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semi.size == 1, s"df window must sit over the query-token semi join:\n$sp")
+    // the query-token distinct is token-keyed too, but over the queries
+    def source(l: SparkPlan): String = l match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.sorted.mkString(",")
+      case r: RDDScanExec => s"rdd ${r.rdd.id}"
+      case o => o.toString
+    }
+    val index = semi.head.left.collectLeaves()
+    assert(sp.collect {
+      case a: BaseAggregateExec if names(a.groupingExpressions) == Seq("token") &&
+        a.collectLeaves().exists(l => index.map(source).contains(source(l))) => a
+    }.isEmpty, s"full-vocabulary df aggregate is back:\n$sp")
+    index
+  }
+
+  test("bm25: df counts only the query terms' postings (semi join, no vocabulary agg)") {
+    val leaves = candidateScan("q_bm25_topk")
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[RDDScanExec]))
+  }
+
+  test("bm25 over a persisted index: the parquet scan feeds df through the semi join") {
+    val leaves = candidateScan("q_index_job")
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[FileSourceScanExec]))
   }
 
   test("ann filtered: candidate generation stays a bucket equi-join") {

@@ -25,6 +25,17 @@ class QualitySpec extends SparkSpec {
     assert(checked.quarantined.get.collect().map(_.getInt(0)).toSeq == Seq(3))
   }
 
+  test("a NULL-valued predicate fails: ERR_FILE quarantines the row, never loses it") {
+    // tag = 'ok' is NULL on row 3
+    val checked = Quality.checkRows(df, Seq(
+      Quality.RowPolicy("tag_ok", $"tag" === "ok", Quality.ErrFile)))
+    assert(checked.passed.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 4))
+    assert(checked.quarantined.get.collect().map(_.getInt(0)).toSeq == Seq(3))
+    val failing = Quality.checkRows(df, Seq(
+      Quality.RowPolicy("tag_ok", $"tag" === "ok", Quality.Fail)))
+    assert(failing.passed.count() == 3)
+  }
+
   test("OPTIONAL policy keeps rows and observes failure count") {
     val checked = Quality.checkRows(df, Seq(
       Quality.RowPolicy("positive", $"value" > 0, Quality.Optional)))

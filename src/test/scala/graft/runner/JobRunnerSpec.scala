@@ -128,4 +128,20 @@ class JobRunnerSpec extends SparkSpec {
     assert(r.quarantined == q && q > 0)
     assert(r.rowsWritten + q == 1000)
   }
+
+  test("watermark covers quarantined rows: a later run re-reads none of them") {
+    val (store, staging, out, quarantine) = newEnv()
+    val top = Tables.load(spark, sf(), "events").agg(max(unix_micros($"ts"))).head.getLong(0)
+    // the top-watermark row (and only it) fails an ERR_FILE policy
+    def run() = JobRunner.run(spark, store, job, readEvents, "wm", ops = Nil,
+      rowPolicies = Seq(Quality.RowPolicy("below_top", $"wm" < top, Quality.ErrFile)),
+      taskPolicies = Nil, sink = (staging, out, Nil), quarantineDir = Some(quarantine))
+    val r1 = run()
+    assert(r1.published && r1.quarantined >= 1)
+    assert(r1.highWatermark === Some(top), "the watermark is the max extracted row")
+    val r2 = run() // no new input
+    assert(r2.quarantined === 0L && r2.rowsWritten === 0L)
+    assert(r2.highWatermark === Some(top))
+    assert(spark.read.parquet(quarantine).count() === r1.quarantined)
+  }
 }

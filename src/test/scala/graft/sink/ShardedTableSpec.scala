@@ -175,4 +175,74 @@ class ShardedTableSpec extends SparkSpec {
     assert(t.readCurrent(spark).select("id").as[Long].collect().toSet === Set(1L, 4L))
     intercept[IllegalArgumentException](t.read(spark, 1L))
   }
+
+  private def dataFiles(dir: String): Seq[String] =
+    new java.io.File(new java.net.URI(dir)).listFiles().map(_.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).toSeq
+
+  test("one data file per touched partition per commit, also over many epochs") {
+    val t = new ShardedTable(tmp("shtab") + "/t", "shard", hconf)
+    (1 to 5).foreach { e =>
+      // 6 input partitions, each holding rows of every shard: without
+      // the rebalance every task would write a file into every shard
+      val df = spark.range(0, 600, 1, 6)
+        .select((col("id") + e * 1000).as("id"), (col("id") % 8).cast("int").as("shard"))
+      t.commit(df, (0 until 8).map(_.toString))
+    }
+    val m = t.manifest(t.currentVersion.get)
+    assert(m.size === 8)
+    m.foreach { case (part, dir) =>
+      assert(dataFiles(dir).size === 1, s"partition $part: ${dataFiles(dir)}")
+    }
+    assert(t.readCurrent(spark).count() === 600L)
+  }
+
+  test("readCurrent runs no Spark job and returns the inferred schema") {
+    val root = tmp("shtab") + "/t"
+    val t = new ShardedTable(root, "shard", hconf)
+    val df = Seq((1L, 0, "a", BigDecimal("1.50"), Seq(1, 2), java.sql.Timestamp.valueOf("2024-01-02 03:04:05")),
+        (2L, 1, null, BigDecimal("2.25"), Seq(3), java.sql.Timestamp.valueOf("2024-02-03 04:05:06")))
+      .toDF("id", "shard", "v", "amount", "xs", "ts")
+      .withColumn("nested", struct(col("id").as("i"), col("v").as("s")))
+    t.commit(df, Seq("0", "1"))
+    t.commit(df.filter(col("shard") === 1), Seq("1"))
+    val fresh = new ShardedTable(root, "shard", hconf)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerBusShim.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val read = try {
+      val r = fresh.readCurrent(spark)
+      org.apache.spark.graftshim.ListenerBusShim.drain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0, "opening a version must not launch a schema-inference job")
+    val inferred = spark.read.parquet(fresh.manifest(2L).values.toSeq.sorted: _*).schema
+    assert(read.schema === inferred)
+    assert(read.collect().toSet === spark.read.parquet(
+      fresh.manifest(2L).values.toSeq.sorted: _*).collect().toSet)
+    assert(fresh.readPartitions(spark, Seq("99")).schema === inferred)
+  }
+
+  test("a manifest record without schema: still reads (falls back to inference)") {
+    val root = tmp("shtab") + "/t"
+    val t = new ShardedTable(root, "shard", hconf)
+    t.commit(Seq((1L, 0, "a"), (2L, 1, "b")).toDF("id", "shard", "v"), Seq("0", "1"))
+    val store = new graft.state.FsStateStore(s"$root/_meta", hconf)
+    val rec = store.get("manifests", "v00001").get
+    assert(rec.contains("schema:"))
+    store.put("manifests", "v00001", rec - "schema:")
+    val old = new ShardedTable(root, "shard", hconf)
+    assert(old.readCurrent(spark).select("id", "shard", "v").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet ===
+      Set((1L, 0, "a"), (2L, 1, "b")))
+    assert(old.readPartitions(spark, Seq("1")).select("id").as[Long].collect().toSeq === Seq(2L))
+    // a delta committed on top of the schema-less record carries one
+    old.commit(Seq((3L, 1, "c")).toDF("id", "shard", "v"), Seq("1"))
+    assert(store.get("manifests", "v00002").get.contains("schema:"))
+    assert(old.readCurrent(spark).count() === 2L)
+  }
 }
