@@ -24,7 +24,7 @@ object Bench {
   private val TopInline = 15
   private val IsoTop = 10 // fresh-JVM isolation runs for the slowest N
 
-  /** Re-time the slowest queries in FRESH JVMs ([[IsoBench]] children,
+  /** Re-time the slowest queries in FRESH JVMs ([[Probe]] children,
     * classpath + module flags inherited from this forked JVM): same-JVM
     * minima share JIT/page-cache state across the catalog; the isolated
     * number is the one a cold executor would see. Failures degrade to
@@ -51,12 +51,12 @@ object Bench {
     names.flatMap { n =>
       try {
         val cmd = Seq(javaBin) ++ keep ++ Seq(
-          "-cp", System.getProperty("java.class.path"), "graft.IsoBench", sfDir, n)
+          "-cp", System.getProperty("java.class.path"), "graft.Probe", sfDir, n)
         val pb = new ProcessBuilder(cmd: _*)
         // merge stderr into stdout: Spark logs to stderr, and an
         // undrained stderr pipe fills its ~64KB buffer and deadlocks
-        // the child (stdout then never reaches EOF). The {"iso": line
-        // is grepped out of the merged stream below.
+        // the child (stdout then never reaches EOF). The probe line
+        // is picked out of the merged stream below.
         pb.redirectErrorStream(true)
         val p = pb.start()
         val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
@@ -64,27 +64,17 @@ object Bench {
         // never hang the whole bench on a wedged child JVM
         if (!p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS))
           p.destroyForcibly()
-        out.linesIterator.find(_.startsWith("{\"iso\":")).flatMap { line =>
-          val m = """"min":([0-9.]+)""".r.findFirstMatchIn(line)
-          m.map(g => n -> g.group(1).toDouble)
-        }
+        out.linesIterator.flatMap(Probe.parse).nextOption().flatMap(_.min).map(n -> _)
       } catch { case _: Throwable => None }
     }.toMap
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaleDir = sys.env.get("SPARK_GRAFT_SCALE_DIR")
       .orElse(Some("/root/testdata/sf0.01"))
       .filter(d => d != sfDir && new java.io.File(d).isDirectory)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Warmup pass (JVM/codegen/broadcast warm; not timed).
     ordered.foreach { case (_, fn) =>

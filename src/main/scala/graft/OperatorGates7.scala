@@ -23,17 +23,36 @@ object OperatorGates7 {
     * its own Spark jobs into separate directories) on a small thread
     * pool, so one unit's task tail back-fills the cores instead of
     * serializing the whole sequence of tiny jobs. Results keep the
-    * input key order; failures propagate.
+    * input key order. The first unit to fail is rethrown as soon as
+    * it fails. Before that, the units' Spark jobs (running ones, and
+    * any a unit would still submit) are cancelled with their tasks
+    * interrupted, and the pool interrupts the other units and waits
+    * (bounded) for them to stop, so no sibling thread or Spark job
+    * outlives the call. A unit that starts a subprocess must destroy
+    * it when interrupted.
     */
-  private def parallelByKey[K, R](keys: Seq[K], maxThreads: Int = 5)(
+  private[graft] def parallelByKey[K, R](spark: SparkSession, keys: Seq[K], maxThreads: Int = 5)(
       unit: K => R): Seq[R] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
     if (keys.isEmpty) return Seq.empty
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(keys.size, maxThreads).max(1))
-    try keys.map { k =>
-      pool.submit(new java.util.concurrent.Callable[R] { def call(): R = unit(k) })
-    }.map(_.get())
-    finally pool.shutdown()
+    val sc = spark.sparkContext
+    val group = s"graft-parallel-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(math.min(keys.size, maxThreads))
+    val done = new ExecutorCompletionService[R](pool)
+    var ok = false
+    try {
+      val futures = keys.map { k =>
+        done.submit { () => sc.setJobGroup(group, "parallelByKey", interruptOnCancel = true); unit(k) }
+      }
+      keys.foreach(_ => done.take().get())
+      ok = true
+      futures.map(_.get())
+    } catch { case e: ExecutionException => throw e.getCause }
+    finally {
+      if (!ok) sc.cancelJobGroupAndFutureJobs(group)
+      pool.shutdownNow()
+      pool.awaitTermination(60, TimeUnit.SECONDS)
+    }
   }
 
   /** Shared boilerplate planted on every 7th document's tail — the
@@ -700,7 +719,7 @@ object OperatorGates7 {
       // back-fills the cores instead of serializing 2x|types| jobs;
       // within a type the two appends to one dir stay sequential
       // (concurrent appends to one path race on _temporary)
-      val rows = parallelByKey(types.toSeq) { tp =>
+      val rows = parallelByKey(s, types.toSeq) { tp =>
         val d = s"$tmp/$tp"
         val part = events.filter(col("event_type") === tp)
         part.coalesce(1).write.mode("append").parquet(d)
@@ -737,7 +756,7 @@ object OperatorGates7 {
       val defaults = empty.withDatasetList(TransferEncodingKey, Seq("gzip"))
       // same per-type independence as q_schema_parity: overlap the
       // 2x|types| tiny write jobs (jobs stay identical, just concurrent)
-      val rows = parallelByKey(types.toSeq) { tp =>
+      val rows = parallelByKey(s, types.toSeq) { tp =>
         val d = s"$tmp/$tp"
         val part = events.filter(col("event_type") === tp)
         // two deterministic halves -> two files in one dataset dir

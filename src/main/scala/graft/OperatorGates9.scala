@@ -186,11 +186,13 @@ object OperatorGates9 {
         // --force-mdc pins SEIPD v1 (MDC) output: gpg 2.3+/2.4 would
         // otherwise emit AEAD/OCB symmetric packets the pure-JCE
         // decoder deliberately does not speak (no-op on gpg 2.2)
-        val rc = new ProcessBuilder("gpg", "--batch", "--yes", "--force-mdc",
+        val p = new ProcessBuilder("gpg", "--batch", "--yes", "--force-mdc",
             "--symmetric",
             "--cipher-algo", "AES256", "--passphrase", s"graft|$id",
             "-o", enc.resolve(s"$id.gpg").toString, pt.toString)
-          .redirectErrorStream(true).start().waitFor()
+          .redirectErrorStream(true).start()
+        // interrupted by a failed sibling: the child must not outlive us
+        val rc = try p.waitFor() finally if (p.isAlive) p.destroyForcibly()
         require(rc == 0, s"gpg encrypt failed for doc $id (rc=$rc)")
       }
       // first encrypt runs ALONE: on a box where ~/.gnupg / gpg-agent
@@ -198,14 +200,7 @@ object OperatorGates9 {
       // on keyring/agent-socket creation and flake — warm it once,
       // then fan out the independent rest
       docs.headOption.foreach(encryptOne)
-      val rest = docs.drop(1)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(rest.length, 10).max(1))
-      try {
-        rest.map { r => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = encryptOne(r)
-        })}.foreach(_.get())
-      } finally pool.shutdown()
+      OperatorGates7.parallelByKey(s, docs.drop(1).toSeq, maxThreads = 10)(encryptOne)
       s.read.format("binaryFile").load(s"$enc/*.gpg")
         .select(regexp_extract(col("path"), "(\\d+)\\.gpg$", 1)
           .cast("long").as("doc_id"), col("content"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.runner.JobConfig
 
 /** CLI: run a properties-defined job (see examples/events_ingest
@@ -11,13 +9,7 @@ object RunJob {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunJob <job.properties> [cpus]")
     val cpus = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(cpus)
     val props = JobConfig.parse(
       java.nio.file.Files.readString(java.nio.file.Paths.get(args.head)))
     val result = JobConfig.runAny(spark, props)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** sf1 scale-validation harness (dev tool, not a driver main).
@@ -27,14 +26,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
 
     // per-table key shifts (base * copyIndex); bases sit far above the
     // sf0.1 key ranges so copies never collide
@@ -84,14 +76,7 @@ object Sf1Check {
     val smallDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session()
 
     def timeOne(n: String, dir: String): (Double, Boolean) = {
       val t0 = System.nanoTime()

@@ -37,6 +37,20 @@ object Tables {
     // scale-adaptive in both directions, not a local-core-count tune
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
+  /** The local session every main and spec runs on: `local[cpus]`,
+    * `cpus` shuffle partitions, no UI, and every [[sessionConfigs]]
+    * entry. `getOrCreate`, so a second call returns the live session.
+    */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cpus]").appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val withTs =

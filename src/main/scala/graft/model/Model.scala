@@ -4,11 +4,6 @@ package graft.model
   * Source/WorkUnit/State abstractions:
   *   - Extract table types: reference
   *     gobblin-api/.../source/workunit/Extract.java:51-56
-  *   - Watermarks: gobblin-api/.../source/extractor/Watermark.java,
-  *     LongWatermark / MultiLongWatermark
-  *     (gobblin-modules/gobblin-kafka-common/.../kafka/MultiLongWatermark.java)
-  *   - Extract types (snapshot/append):
-  *     gobblin-core/.../extract/ExtractType.java:23-27
   *
   * In the Spark re-design a "WorkUnit" collapses into a read-spec the
   * driver computes from the state store; Spark owns task distribution.
@@ -26,54 +21,6 @@ object TableType {
   }
 }
 
-/** Job-level commit policies (gobblin-core-base/.../JobCommitPolicy
-  * .java:31-54). FULL publishes only if every branch staged
-  * successfully (Publisher.publishAll); PARTIAL publishes whatever
-  * staged (Publisher.publishPartial); SUCCESSFUL_TASKS maps to
-  * per-dataset jobs, each committing independently.
-  */
-sealed trait CommitPolicy
-object CommitPolicy {
-  case object CommitOnFullSuccess extends CommitPolicy
-  case object CommitOnPartialSuccess extends CommitPolicy
-  case object CommitSuccessfulTasks extends CommitPolicy
-}
-
-sealed trait ExtractType
-object ExtractType {
-  case object Snapshot extends ExtractType
-  case object AppendDaily extends ExtractType
-  case object AppendHourly extends ExtractType
-  case object AppendBatch extends ExtractType
-}
-
-/** Monotonic progress marker; serialized into the JSON state store. */
-sealed trait Watermark {
-  def serialize: String
-}
-
-/** Simple numeric watermark (record id, epoch millis, file mtime…). */
-final case class LongWatermark(value: Long) extends Watermark {
-  def serialize: String = value.toString
-}
-
-/** One offset per partition (Kafka-style).
-  * Reference: MultiLongWatermark.java.
-  */
-final case class MultiWatermark(values: Map[String, Long]) extends Watermark {
-  def serialize: String =
-    values.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
-}
-
-object Watermark {
-  def parseLong(s: String): LongWatermark = LongWatermark(s.toLong)
-  def parseMulti(s: String): MultiWatermark =
-    if (s.isEmpty) MultiWatermark(Map.empty)
-    else MultiWatermark(s.split(",").map { kv =>
-      val Array(k, v) = kv.split("=", 2); k -> v.toLong
-    }.toMap)
-}
-
 /** A declarative ingestion job: source read-spec + transform chain +
   * quality policies + sink + publish policy. Replaces the reference's
   * Source→Extractor→Converter*→Policies→Writer→Publisher construct chain
@@ -83,17 +30,4 @@ object Watermark {
 final case class JobSpec(
     name: String,
     namespace: String = "graft",
-    tableType: TableType = TableType.AppendOnly,
-    extractType: ExtractType = ExtractType.Snapshot)
-
-/** Working-state of one run, mirroring WorkUnitState.WorkingState
-  * (gobblin-api/.../WorkUnitState.java:57-78).
-  */
-sealed trait RunState
-object RunState {
-  case object Pending extends RunState
-  case object Running extends RunState
-  case object Successful extends RunState
-  case object Failed extends RunState
-  case object Committed extends RunState
-}
+    tableType: TableType = TableType.AppendOnly)

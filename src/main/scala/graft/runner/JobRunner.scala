@@ -3,7 +3,7 @@ package graft.runner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{JobSpec, LongWatermark}
+import graft.model.JobSpec
 import graft.operators.Converters.Op
 import graft.quality.Quality
 import graft.sink.{Publisher, SinkSpec}

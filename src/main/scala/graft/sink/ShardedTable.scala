@@ -160,17 +160,6 @@ final class ShardedTable(val root: String, val partCol: String,
     }
   }
 
-  /** The partitions version v's own commit wrote (its delta): the
-    * raw record's p: entries — for a delta that is exactly the
-    * touched set; for a full record (first commit or compaction
-    * point) it is every partition, which is the correct answer for a
-    * mirror that has to start from scratch there anyway.
-    */
-  def touchedOf(version: Long): Set[String] =
-    rawRecord(version).keysIterator
-      .collect { case k if k.startsWith("p:") => k.stripPrefix("p:") }
-      .toSet
-
   def currentVersion: Option[Long] =
     meta.get("pointer", "current").flatMap(_.get("version")).map(_.toLong)
 

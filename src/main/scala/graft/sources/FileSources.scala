@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-import graft.model.LongWatermark
 import graft.state.FsStateStore
 
 /** Driver-side file-source planning: which paths does this run read?

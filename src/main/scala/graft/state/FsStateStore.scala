@@ -28,7 +28,7 @@ trait StateStore {
   *
   * State values are flat string maps — the same shape the reference's
   * Properties-backed State carries (gobblin-api/.../configuration/
-  * State.java). Watermarks serialize into them (see graft.model).
+  * State.java). Watermarks serialize into them as plain strings.
   *
   * Scale note: state files are per-dataset metadata (bytes, not data);
   * using the Hadoop FileSystem API keeps this working unchanged on

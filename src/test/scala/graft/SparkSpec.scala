@@ -4,18 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (guide: one lazy session, not per
-  * test). Config mirrors Verify/Bench so specs see the same semantics.
+  * test), built by the same [[Tables.session]] as Verify/Bench so
+  * specs see the same semantics.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
+  lazy val spark: SparkSession = Tables.session(cpus = "4")
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 import graft.functions.Text
-import graft.model.{CommitPolicy, TableType}
+import graft.model.TableType
 import graft.sink.{Publisher, SinkSpec}
 
 /** Small operators not covered by the bigger suites. */
@@ -84,10 +84,9 @@ class SmallOpsSpec extends SparkSpec {
     assert(r.getInt(2) == 3)       // "ab", "cd", "!"
   }
 
-  test("table types map to write modes; commit policies exist") {
+  test("table types map to write modes") {
     assert(TableType.writeMode(TableType.SnapshotOnly) == "overwrite")
     assert(TableType.writeMode(TableType.AppendOnly) == "append")
-    assert(CommitPolicy.CommitOnFullSuccess != CommitPolicy.CommitOnPartialSuccess)
   }
 
   test("publishPartial publishes staged branches, reports missing ones") {

@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** WARC reader: round-trips through the writer in all three layouts
   * (plain, whole-stream gzip, Common Crawl member-per-record gzip),
   * a hand-assembled file with non-response records, and loud
   * id-tagged corruption failures.
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends SparkSpec {
 
   private def pages(n: Int): Seq[(String, Array[Byte])] =
     (0 until n).map(i => (s"https://ex.com/p$i",
@@ -75,9 +75,6 @@ class WarcSpec extends AnyFunSuite {
     assert(rec.httpCharset == "windows-1252")
     assert(new String(rec.payload, "ISO-8859-1") == s"<html>$text</html>")
     // and the Spark-facing records() decode honors it end-to-end
-    import org.apache.spark.sql.SparkSession
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val row = WarcCodec.records(
       Seq((5L, bytes)).toDF("media_id", "content")).collect().head
