@@ -316,7 +316,7 @@ object OperatorGates17 {
     // --- cdxfetch straight off a ZipNum distribution (the layout
     //     Common Crawl actually publishes): index a crawl with
     //     job.type=cdxindex emitting ONLY the ZipNum face, then run
-    //     job.type=cdxfetch with cdx.zipnumSource=true — readZipnum
+    //     job.type=cdxfetch with source.format=zipnum — readZipnum
     //     feeds the ledger pipeline with no parquet conversion, the
     //     capture timestamp is the watermark (cdx.seq=ts), and a
     //     second epoch over the SAME index is a watermark no-op.
@@ -345,7 +345,7 @@ object OperatorGates17 {
           s"""job.type=cdxfetch
              |job.name=zipfetch_gate
              |source.path=$tmp/zipnum
-             |cdx.zipnumSource=true
+             |source.format=zipnum
              |cdx.seq=ts
              |cdx.warcDir=$warcDir
              |cdx.maxGap=512

@@ -467,31 +467,32 @@ object OperatorGates8 {
     }),
 
     // --- versioned-table commits with snapshot isolation, time
-    //     travel, and rollback (sink/VersionedTable.scala — the
-    //     Iceberg commit surface natively): commit v1 (full agg),
-    //     commit v2 (narrowed), time-travel both, roll back to v1,
-    //     continue with v3. Output = the post-rollback current read,
-    //     which must be v1's content with v3 in the history ----------
+    //     travel, and rollback (sink/ShardedTable.scala — the Iceberg
+    //     commit surface natively — with one constant partition, so
+    //     every commit replaces the whole table): commit v1 (full
+    //     agg), commit v2 (narrowed), time-travel both, roll back to
+    //     v1, continue with v3. Output = the post-rollback current
+    //     read, which must be v1's content with v3 in the history ----
     "q_versioned_table" -> ((s, dir) => {
-      import graft.sink.VersionedTable
-      val tbl = new VersionedTable(tmpDir("q_vtable") + "/t",
-        s.sparkContext.hadoopConfiguration)
+      val tbl = new graft.sink.ShardedTable(tmpDir("q_vtable") + "/t",
+        "_p", s.sparkContext.hadoopConfiguration)
       val ev = t(s, dir, "events")
       val full = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(floor(col("value") * 1000).cast("long")).as("sum_v_milli"))
+        .withColumn("_p", lit(0))
         .persist() // five actions below reuse the one aggregation
-      val v1 = tbl.commit(full)
-      val v2 = tbl.commit(full.filter(col("event_type") =!= "error"))
+      val v1 = tbl.commit(full, Seq("0"))
+      val v2 = tbl.commit(full.filter(col("event_type") =!= "error"), Seq("0"))
       require(v1 == 1L && v2 == 2L && tbl.currentVersion.contains(2L))
       require(tbl.read(s, 1L).count() == tbl.readCurrent(s).count() + 1,
         "time travel must see the un-narrowed v1")
       tbl.rollback(1L)
-      val v3 = tbl.commit(full.limit(1)) // history continues after rollback
+      val v3 = tbl.commit(full.limit(1), Seq("0")) // history continues after rollback
       require(v3 == 3L && tbl.history == Seq(1L, 2L, 3L))
       full.unpersist()
       tbl.rollback(1L)
-      tbl.readCurrent(s).orderBy(col("event_type"))
+      tbl.readCurrent(s).drop("_p").orderBy(col("event_type"))
     }),
 
     // --- term-distribution drift between corpus versions (the token-

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{NormalizeNfc, StripAccents, Text}
 import graft.model.JobSpec
-import graft.operators.Converters
+import graft.operators.{AnnIndex, Converters}
 import graft.operators.Converters.Op
 import graft.quality.Quality
 import graft.state.FsStateStore
@@ -628,15 +628,9 @@ object JobConfig {
           (table, hasCurrent, delta, pre) =>
             // a doc can be updated MORE THAN ONCE inside one delta;
             // the merge treats every delta row as current, so reduce
-            // to the latest version per doc by seq first (ties: any —
-            // equal seq means equal version under the watermark
-            // contract). Same latest-wins discipline as Scd2.merge.
-            val latest = delta
-              .withColumn("_rn", row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy(col(idCol))
-                  .orderBy(col(seqCol).cast("long").desc)))
-              .filter(col("_rn") === 1).drop("_rn")
+            // to the latest version per doc first. Same latest-wins
+            // discipline as Scd2.merge.
+            val latest = latestById(delta, idCol, seqCol)
             val (merged, touched) = graft.operators.Bm25.shardedMerge(table,
               hasCurrent, latest, idCol, textCol, nShards,
               precomputedTouched = pre,
@@ -714,40 +708,30 @@ object JobConfig {
         // REPLACE their rows, so merge == full rebuild exactly. The
         // assignments persist as a ShardedTable partitioned by
         // list_id: an epoch rewrites only the lists its delta touches
-        // and probe-time reads open only probed lists. The frozen
+        // and probe-time reads open only probed lists. A freshly fit
         // codebook is written as a root sidecar BEFORE the pointer
         // flip (idempotent — refit from the same first delta is
-        // deterministic), so no committed version exists without it.
+        // deterministic), so no committed version exists without it;
+        // epochs that load the frozen codebook leave it untouched.
         val aId = req(p, "annindex.id")
         val aVec = req(p, "annindex.vec")
         val aSeq = req(p, "annindex.seq")
         val aCents = opt(p, "annindex.centroids").map(_.toInt).getOrElse(64)
+        val aOut = req(p, "sink.output")
         val aConf = spark.sparkContext.hadoopConfiguration
-        // set by applyDelta, written by the sidecar hook (runs just
-        // before the commit, under the same job lock)
-        var codebook: Option[graft.functions.Ann.IvfIndex] = None
         incrementalShardedPublish(spark, p, kind = "annindex", aSeq,
-          partCol = "list_id",
-          commitSidecar = () => codebook.foreach { idx =>
-            new FsStateStore(req(p, "sink.output"), aConf)
-              .put("_centroids", "annindex",
-                Map("table" -> graft.operators.AnnIndex.encodeCentroids(idx)))
-          }) { (table, hasCurrent, delta, _) =>
+          partCol = "list_id") { (table, hasCurrent, delta, _) =>
           // touched = IVF list ids, known only after assignment
           // against the codebook — no row-wise touchedCol exists
-          val latest = delta
-            .withColumn("_rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col(aId))
-                .orderBy(col(aSeq).cast("long").desc)))
-            .filter(col("_rn") === 1).drop("_rn")
+          val latest = latestById(delta, aId, aSeq)
           val idx =
-            if (hasCurrent)
-              graft.operators.AnnIndex.loadCodebook(req(p, "sink.output"), aConf)
+            if (hasCurrent) AnnIndex.loadCodebook(aOut, aConf)
             else graft.functions.Ann.sampledIvf(latest, aCents, aId, aVec)
-          codebook = Some(idx)
-          val (merged, touched) = graft.operators.AnnIndex.shardedMerge(idx,
-            table, hasCurrent, latest, aId, aVec)
+          val (merged, touched) =
+            AnnIndex.shardedMerge(idx, table, hasCurrent, latest, aId, aVec)
+          if (!hasCurrent)
+            new FsStateStore(aOut, aConf).put("_centroids", "annindex",
+              Map("table" -> AnnIndex.encodeCentroids(idx)))
           (merged, touched, () => ())
         }
 
@@ -993,13 +977,10 @@ object JobConfig {
         //                      (domain, content) — disallowed URLs are
         //                      dropped BEFORE fetch planning
         //   cdx.crawler        agent name for robots (default graftbot)
-        //   cdx.zipnumSource   true = source.path is a ZipNum index
-        //                      dir (cdx-*.gz + cluster.idx — what
-        //                      Common Crawl publishes), consumed via
-        //                      readZipnum with no parquet conversion;
-        //                      cdx.seq then DEFAULTS to ts (capture
-        //                      timestamp — the ZipNum shape has no
-        //                      'seq' column)
+        // With source.format=zipnum, source.path is a ZipNum index dir
+        // (cdx-*.gz + cluster.idx — what Common Crawl publishes), read
+        // through loadSource with no parquet conversion; a dir with no
+        // index yet reads as an empty delta, i.e. a no-op epoch.
         import graft.operators.{CdxIndex, Robots}
         val warcDir = req(p, "cdx.warcDir")
         val maxGap = opt(p, "cdx.maxGap").map(_.toLong).getOrElse(4096L)
@@ -1008,31 +989,16 @@ object JobConfig {
         // natural watermark is the capture timestamp, so default THERE
         // to 'ts' instead of failing later with an opaque unresolved-
         // column AnalysisException deep in incrementalShardedPublish
-        val zipnumIn = opt(p, "cdx.zipnumSource").exists(_.toBoolean)
-        val cdxSeqCol = opt(p, "cdx.seq")
-          .getOrElse(if (zipnumIn) "ts" else "seq")
+        val cdxSeqCol = opt(p, "cdx.seq").getOrElse(
+          if (opt(p, "source.format").contains("zipnum")) "ts" else "seq")
         val maxRange = opt(p, "cdx.maxRangeBytes").map(_.toLong)
           .getOrElse(256L << 20)
         val robots = opt(p, "cdx.robotsPath").map { rp =>
           (Robots.rulesTable(spark.read.parquet(rp), "domain", "content"),
             opt(p, "cdx.crawler").getOrElse("graftbot"))
         }
-        val zipnumSrc =
-          if (!zipnumIn) None
-          else Some { () =>
-            val dir = req(p, "source.path")
-            val idx = new org.apache.hadoop.fs.Path(s"$dir/cluster.idx")
-            val fsz = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val hasIdx = fsz.exists(idx) ||
-              Option(fsz.globStatus(
-                new org.apache.hadoop.fs.Path(s"$dir/cdx-*.idx")))
-                .exists(_.nonEmpty)
-            if (!hasIdx) None
-            else Some(CdxIndex.readZipnum(spark, dir))
-          }
         incrementalShardedPublish(spark, p, kind = "cdxfetch", cdxSeqCol,
-          partCol = "shard",
-          sourceOverride = zipnumSrc) { (table, hasCurrent, delta, _) =>
+          partCol = "shard") { (table, hasCurrent, delta, _) =>
             // ledgerMerge's candidate/touched sets are post-filter
             // (robots, revisit, digest dedup) — no row-wise touchedCol;
             // its cleanup releases the two per-epoch delta caches
@@ -1110,17 +1076,30 @@ object JobConfig {
       case other => throw new IllegalArgumentException(s"unknown job.type: $other")
     }
 
+  /** The latest row per `id` by `seq` (ties: any — equal seq means
+    * equal version under the watermark contract). A row_number window
+    * rather than `Dedup.keepMaxBy`: on index_bulk the max_by-over-struct
+    * aggregation cost one more Spark job, more shuffle bytes and a
+    * higher write amplification.
+    */
+  private def latestById(delta: DataFrame, id: String, seq: String): DataFrame =
+    delta.withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col(id))
+          .orderBy(col(seq).cast("long").desc)))
+      .filter(col("_rn") === 1).drop("_rn")
+
   /** Shared engine for the watermarked incremental-maintenance job
-    * types (scd2 = dimension, rollup = cube, funnel = sequence
-    * match, index = retrieval, annindex = ANN): read rows above the
-    * published watermark, apply `applyDelta`, commit through a
-    * [[graft.sink.ShardedTable]] — an epoch writes O(touched
-    * partitions), never O(state) — and each epoch is a
+    * types (scd2 = dimension, rollup = cube, funnel = sequence match,
+    * index = retrieval, classify = classifier statistics, annindex =
+    * ANN, frontier = crawl frontier, cdxfetch = crawl consumption):
+    * read rows above the published watermark, apply `applyDelta`,
+    * commit through a [[graft.sink.ShardedTable]] — an epoch writes
+    * O(touched partitions), never O(state) — and each epoch is a
     * time-travelable version. The high watermark rides the version
     * manifest, committing ATOMICALLY with the data at the pointer
-    * flip, so a crash after the commit but before the (secondary,
-    * observability-only) state-store write replays as an empty delta:
-    * exactly-once even for the non-idempotent additive rollup merge.
+    * flip, so a crash at any point replays as either the whole epoch
+    * or an empty delta: exactly-once even for the non-idempotent
+    * additive rollup merge.
     * Contract: JobLock serialization (ref gobblin-runtime/.../locks/
     * FileBasedJobLock.java:40 — overlapping runs would double-apply;
     * the late one must lose); the watermark is trusted only while its
@@ -1140,10 +1119,7 @@ object JobConfig {
     * release point for any caches applyDelta registered (persist pins
     * plans in the SQL CacheManager until an explicit unpersist, so a
     * per-epoch cache without this hook leaks one entry per epoch /
-    * micro-batch). `commitSidecar` runs after applyDelta and BEFORE
-    * the commit (for frozen root sidecars like the annindex codebook —
-    * a crash between the two leaves a sidecar without a version, which
-    * the deterministic refit overwrites identically on retry).
+    * micro-batch).
     *
     * `touchedCol`: the partition-value expression over a delta row,
     * when the touched set is a pure row-wise function of the delta
@@ -1154,19 +1130,15 @@ object JobConfig {
     */
   private def incrementalShardedPublish(spark: SparkSession, p: Properties,
       kind: String, seqCol: String, partCol: String,
-      commitSidecar: () => Unit = () => (),
-      sourceOverride: Option[() => Option[DataFrame]] = None,
       touchedCol: Option[Column] = None)(
       applyDelta: (graft.sink.ShardedTable, Boolean, DataFrame, Option[Seq[String]]) => (DataFrame, Seq[String], () => Unit)): Map[String, String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val store = new FsStateStore(req(p, "state.dir"), conf)
-    val jobName = req(p, "job.name")
     val outDir = req(p, "sink.output")
     val srcPath = new org.apache.hadoop.fs.Path(req(p, "source.path"))
     val noop = (wm: Option[Long]) => Map("published" -> "false",
       "deltaRows" -> "0", "highWatermark" -> wm.map(_.toString).getOrElse(""))
-    val lock = new JobLock(req(p, "state.dir") + "/_locks", s"$kind-$jobName",
-      conf = conf)
+    val lock = new JobLock(req(p, "state.dir") + "/_locks",
+      s"$kind-${req(p, "job.name")}", conf = conf)
     lock.withLock {
       val table = new graft.sink.ShardedTable(outDir, partCol, conf)
       val dataPath = new org.apache.hadoop.fs.Path(s"$outDir/data")
@@ -1179,16 +1151,13 @@ object JobConfig {
         if (!hasCurrent) None
         else table.currentMeta.get("highWatermark").filter(_.nonEmpty).map(_.toLong)
       val srcFs = srcPath.getFileSystem(conf)
-      val srcOpt = sourceOverride match {
-        case Some(reader) => reader()
-        case None =>
-          if (!srcFs.exists(srcPath)) None
-          else if (!srcFs.listStatus(srcPath).exists { s =>
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          }) None
-          else Some(loadSource(spark, p))
-      }
+      val srcOpt =
+        if (!srcFs.exists(srcPath)) None
+        else if (!srcFs.listStatus(srcPath).exists { s =>
+          val n = s.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }) None
+        else Some(loadSource(spark, p))
       srcOpt.fold(noop(prior)) { src =>
         val delta = prior.fold(src)(w => src.filter(col(seqCol).cast("long") > w))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1208,13 +1177,8 @@ object JobConfig {
             val (merged, touched, cleanup) =
               applyDelta(table, hasCurrent, delta, pre)
             try {
-              commitSidecar()
               val version = table.commit(merged, touched,
                 Map("highWatermark" -> hw.toString), full = !hasCurrent)
-              // observability-only secondary record (the manifest is the
-              // source of truth for replay decisions)
-              store.put(kind, jobName, Map("highWatermark" -> hw.toString,
-                "version" -> version.toString))
               Map("published" -> "true", "deltaRows" -> deltaRows.toString,
                 "highWatermark" -> hw.toString, "version" -> version.toString,
                 "touchedPartitions" -> touched.size.toString)

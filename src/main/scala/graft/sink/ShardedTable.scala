@@ -9,12 +9,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import graft.state.FsStateStore
 
 /** Partition-manifest versioned table — the Iceberg-style commit
-  * surface for PARTITION-GRANULAR incremental maintenance, unifying
-  * [[VersionedTable]]'s snapshot isolation / time travel / rollback
-  * with partition-level rewrites (ref gobblin-iceberg/.../writer/
-  * IcebergMetadataWriter.java: file-level snapshot commits + a
-  * metadata pointer flip — here re-expressed as partition-dir-level
-  * manifests, the granularity Spark writes at).
+  * surface for PARTITION-GRANULAR incremental maintenance: snapshot
+  * isolation, time travel and rollback with partition-level rewrites
+  * (ref gobblin-iceberg/.../writer/IcebergMetadataWriter.java:
+  * file-level snapshot commits + a metadata pointer flip — here
+  * re-expressed as partition-dir-level manifests, the granularity
+  * Spark writes at). A single constant partition makes every commit
+  * a full-table version.
   *
   * Layout:
   * {{{

@@ -403,6 +403,84 @@ class JobConfigSpec extends SparkSpec {
     assert(table.metaOf(3L)("highWatermark") === "6")
   }
 
+  test("job.type=cdxfetch with source.format=zipnum: no index yet is a no-op") {
+    val root = tmpDir("cdxfetchzip")
+    def fetch(src: String) = JobConfig.runAny(spark, JobConfig.parse(
+      s"""job.type=cdxfetch
+         |job.name=t_cdxzip
+         |source.path=$src
+         |source.format=zipnum
+         |cdx.warcDir=$root/warc
+         |sink.output=$root/ledger
+         |state.dir=$root/wm
+         |""".stripMargin))
+    val missing = fetch(s"$root/missing")
+    assert(missing("published") == "false" && missing("deltaRows") == "0",
+      s"a missing source dir must be a no-op: $missing")
+    // shards landed, but neither cluster.idx nor cdx-*.idx yet: the
+    // ZipNum read is empty, so the epoch publishes nothing
+    val shards = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "zipnum"))
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(shards.resolve("cdx-00000.gz")))
+    try gz.write("com,example)/ 20240101000000 {}\n".getBytes("UTF-8"))
+    finally gz.close()
+    val noIdx = fetch(shards.toString)
+    assert(noIdx("published") == "false" && noIdx("deltaRows") == "0",
+      s"shards without an index must be a no-op: $noIdx")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "ledger", "_meta")))
+  }
+
+  test("job.type=annindex: the codebook sidecar is written once per fit") {
+    import spark.implicits._
+    import graft.operators.AnnIndex
+    val root = tmpDir("annjob")
+    val props = JobConfig.parse(
+      s"""job.type=annindex
+         |job.name=t_ann
+         |source.path=$root/src
+         |annindex.id=vec_id
+         |annindex.vec=embedding
+         |annindex.seq=vec_id
+         |annindex.centroids=4
+         |sink.output=$root/idx
+         |state.dir=$root/state
+         |""".stripMargin)
+    def vecs(ids: Range) = ids.map(i =>
+      (i.toLong, Seq(math.sin(i), math.cos(i), (i % 5).toDouble)))
+      .toDF("vec_id", "embedding")
+    vecs(0 until 20).write.mode("append").parquet(s"$root/src")
+    assert(JobConfig.runAny(spark, props)("published") == "true")
+    val sidecar = java.nio.file.Paths.get(root, "idx", "_centroids", "annindex.json")
+    val fitted = java.nio.file.Files.readAllBytes(sidecar)
+    // an old, distinctive mtime: any rewrite moves it
+    val planted = java.nio.file.attribute.FileTime.fromMillis(1000000L)
+    java.nio.file.Files.setLastModifiedTime(sidecar, planted)
+    def unchanged(): Unit = {
+      assert(java.nio.file.Files.readAllBytes(sidecar).sameElements(fitted))
+      assert(java.nio.file.Files.getLastModifiedTime(sidecar) === planted)
+    }
+    vecs(20 until 40).write.mode("append").parquet(s"$root/src")
+    val r2 = JobConfig.runAny(spark, props)
+    assert(r2("published") == "true" && r2("highWatermark") == "39")
+    unchanged()
+    val r3 = JobConfig.runAny(spark, props)
+    assert(r3("published") == "false")
+    unchanged()
+    // data dirs deleted under the metadata: the rebuild refits the
+    // codebook over the full source and rewrites the sidecar
+    val data = new org.apache.hadoop.fs.Path(s"$root/idx/data")
+    data.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(data, true)
+    val r4 = JobConfig.runAny(spark, props)
+    assert(r4("published") == "true")
+    assert(java.nio.file.Files.getLastModifiedTime(sidecar) !== planted)
+    assert(AnnIndex.encodeCentroids(AnnIndex.loadCodebook(s"$root/idx",
+        spark.sparkContext.hadoopConfiguration)) ===
+      AnnIndex.encodeCentroids(graft.functions.Ann.sampledIvf(
+        spark.read.parquet(s"$root/src"), 4)))
+  }
+
   test("job.type=curate: half-specified budget is a config error, not a silent full publish") {
     import spark.implicits._
     val root = tmpDir("curatehalf")
@@ -582,7 +660,7 @@ class JobConfigSpec extends SparkSpec {
     assert(table.read(spark, 1L).count() === 3L) // epoch-1 dim rows
   }
 
-  test("job.type=rollup: crash after publish, before state write, cannot double-count") {
+  test("job.type=rollup: replay after a committed epoch cannot double-count") {
     import spark.implicits._
     val root = tmpDir("jobrollup")
     val props = JobConfig.parse(
@@ -600,15 +678,14 @@ class JobConfigSpec extends SparkSpec {
       .toDF("g", "m", "seq").write.mode("append").parquet(s"$root/src")
     val r1 = JobConfig.runAny(spark, props)
     assert(r1("published") == "true" && r1("highWatermark") == "3")
-    // simulate the crash window: the version committed but the
-    // observability state-store write never happened — the additive
-    // merge must STILL not re-apply the delta, because the watermark
-    // rides in the committed manifest
-    val stateFile = java.nio.file.Paths.get(root, "wm", "rollup", "t_rollup.json")
-    assert(java.nio.file.Files.deleteIfExists(stateFile))
+    // the watermark lives ONLY in the committed manifest: no separate
+    // state-store record exists whose loss could open a crash window,
+    // and the additive merge must not re-apply the delta on replay
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "wm", "rollup", "t_rollup.json")))
     val r2 = JobConfig.runAny(spark, props)
     assert(r2("published") == "false" && r2("deltaRows") == "0",
-      s"replay after lost state write must be a no-op: $r2")
+      s"replay after a committed epoch must be a no-op: $r2")
     val sums = new graft.sink.ShardedTable(s"$root/state", "shard",
         spark.sparkContext.hadoopConfiguration)
       .readCurrent(spark).drop("shard")

@@ -74,6 +74,36 @@ class ShardedTableSpec extends SparkSpec {
     assert(v3 === 3L)
   }
 
+  test("an empty table has no current version; unknown versions raise") {
+    val t = new ShardedTable(tmp("shtab") + "/t", "shard", hconf)
+    assert(t.currentVersion.isEmpty && t.history.isEmpty)
+    intercept[IllegalStateException](t.readCurrent(spark))
+    t.commit(Seq((1L, 0)).toDF("id", "shard"), Seq("0"))
+    intercept[IllegalArgumentException](t.read(spark, 0L))
+    intercept[IllegalArgumentException](t.read(spark, 7L))
+    intercept[IllegalArgumentException](t.rollback(7L))
+    assert(t.currentVersion === Some(1L))
+  }
+
+  test("a manifest record without its pointer flip leaves the previous version live") {
+    val root = tmp("shtab") + "/t"
+    new ShardedTable(root, "shard", hconf)
+      .commit(Seq((1L, 0), (2L, 1)).toDF("id", "shard"), Seq("0", "1"))
+    // the commit's crash window: the v2 record landed, the pointer
+    // never moved
+    val store = new graft.state.FsStateStore(s"$root/_meta", hconf)
+    store.put("manifests", "v00002", Map("p:0" -> s"$root/data/lost/_part=0"))
+    val t = new ShardedTable(root, "shard", hconf)
+    assert(t.currentVersion === Some(1L), "pointer must still be v1")
+    assert(t.readCurrent(spark).select("id").as[Long].collect().toSet === Set(1L, 2L))
+    // the orphan shows in history; the next commit numbers past it and
+    // bases its record on the CURRENT version, not on the orphan
+    assert(t.history === Seq(1L, 2L))
+    assert(t.commit(Seq((3L, 1)).toDF("id", "shard"), Seq("1")) === 3L)
+    assert(store.get("manifests", "v00003").get.get("base:") === Some("1"))
+    assert(t.readCurrent(spark).select("id").as[Long].collect().toSet === Set(1L, 3L))
+  }
+
   test("readPartitions opens only the named partitions (manifest pruning)") {
     val t = new ShardedTable(tmp("shtab") + "/t", "shard", hconf)
     t.commit((0 until 30).map(i => (i.toLong, i % 3)).toDF("id", "shard"),
