@@ -85,7 +85,7 @@ class ShardedTableSpec extends SparkSpec {
     assert(t.currentVersion === Some(1L))
   }
 
-  test("a manifest record without its pointer flip leaves the previous version live") {
+  test("a crash before the pointer flip leaves the previous version live") {
     val root = tmp("shtab") + "/t"
     new ShardedTable(root, "shard", hconf)
       .commit(Seq((1L, 0), (2L, 1)).toDF("id", "shard"), Seq("0", "1"))
