@@ -32,40 +32,9 @@ object Bench {
     */
   private def isolated(sfDir: String, names: Seq[String]): Map[String, Double] = {
     if (sys.env.get("SPARK_GRAFT_ISO").contains("0")) return Map.empty
-    import scala.jdk.CollectionConverters._
-    val javaBin = new java.io.File(
-      new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    // keep module opens + heap; drop agent/debug flags
-    val keep = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < jvmArgs.length) {
-      val a = jvmArgs(i)
-      if (a == "--add-opens" && i + 1 < jvmArgs.length) {
-        keep += a += jvmArgs(i + 1); i += 2
-      } else if (a.startsWith("--add-opens=") || a.startsWith("-Xmx")) {
-        keep += a; i += 1
-      } else i += 1
-    }
     names.flatMap { n =>
-      try {
-        val cmd = Seq(javaBin) ++ keep ++ Seq(
-          "-cp", System.getProperty("java.class.path"), "graft.Probe", sfDir, n)
-        val pb = new ProcessBuilder(cmd: _*)
-        // merge stderr into stdout: Spark logs to stderr, and an
-        // undrained stderr pipe fills its ~64KB buffer and deadlocks
-        // the child (stdout then never reaches EOF). The probe line
-        // is picked out of the merged stream below.
-        pb.redirectErrorStream(true)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        // belt-and-braces: stdout EOF means the child is done or dead;
-        // never hang the whole bench on a wedged child JVM
-        if (!p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS))
-          p.destroyForcibly()
-        out.linesIterator.flatMap(Probe.parse).nextOption().flatMap(_.min).map(n -> _)
-      } catch { case _: Throwable => None }
+      try Probe.child(Seq(sfDir, n)).headOption.flatMap(_.min).map(n -> _)
+      catch { case _: Throwable => None }
     }.toMap
   }
 

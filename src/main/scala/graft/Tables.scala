@@ -38,14 +38,16 @@ object Tables {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   /** The local session every main and spec runs on: `local[cpus]`,
-    * `cpus` shuffle partitions, no UI, and every [[sessionConfigs]]
-    * entry. `getOrCreate`, so a second call returns the live session.
+    * `cpus` shuffle partitions, no UI, every [[sessionConfigs]] entry
+    * and then `conf`. `getOrCreate`, so a second call returns the live
+    * session (and `conf` only takes effect on the first).
     */
-  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      conf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]").appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    (sessionConfigs ++ conf).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -90,6 +90,31 @@ object JobConfig {
       case f => spark.read.format(f).load(req(p, "source.path"))
     }
 
+  /** What a run of this job reads, as one SHA-256: the sorted
+    * `(path, mtime, length)` of every non-hidden file under
+    * `source.path` (recursive) and the job's full properties, so any
+    * config change also differs. None when the source holds no such
+    * file (or does not exist). List BEFORE the read: a file landing
+    * in between is read but not recorded, so the next run differs and
+    * takes the full path. Contract: a listed file with the same length
+    * and mtime has the same content — the assumption Spark's own file
+    * source makes.
+    */
+  private def sourceFingerprint(conf: org.apache.hadoop.conf.Configuration,
+      p: Properties): Option[String] = {
+    val files = graft.sources.FileDiffSource.plan(req(p, "source.path"), Map.empty, conf).snapshot
+    if (files.isEmpty) None
+    else {
+      import scala.jdk.CollectionConverters._
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val props = p.stringPropertyNames.asScala.toSeq.map(k => k -> p.getProperty(k))
+      (files.toSeq.sorted ++ Seq("" -> "") ++ props.sorted).foreach { case (k, v) =>
+        md.update(s"$k\u0000$v\u0000".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      Some(md.digest().map(b => f"$b%02x").mkString)
+    }
+  }
+
   private def opt(p: Properties, key: String): Option[String] =
     Option(p.getProperty(key)).map(_.trim).filter(_.nonEmpty)
 
@@ -1112,6 +1137,17 @@ object JobConfig {
     * (expireVersions reclaims them) and the table on its previous
     * version.
     *
+    * No-op epochs start no Spark job: each commit records, as
+    * `sourceFiles` in its user metadata, the [[sourceFingerprint]] of
+    * the listing taken before its read, and an epoch whose fingerprint
+    * equals the current version's returns the no-op result without
+    * reading the source. That relies on the fingerprint's contract (a
+    * listed file with the same length and mtime has the same content).
+    * Known limit: an epoch whose delta is empty commits nothing, so it
+    * records no fingerprint, and the next run reads the source again;
+    * a version committed without `sourceFiles` always takes the full
+    * path.
+    *
     * `applyDelta(table, hasCurrent, delta, precomputedTouched)`
     * returns the replacement rows for the touched partitions, the
     * touched-partition values, and a cleanup hook invoked (in a
@@ -1134,7 +1170,6 @@ object JobConfig {
       applyDelta: (graft.sink.ShardedTable, Boolean, DataFrame, Option[Seq[String]]) => (DataFrame, Seq[String], () => Unit)): Map[String, String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val outDir = req(p, "sink.output")
-    val srcPath = new org.apache.hadoop.fs.Path(req(p, "source.path"))
     val noop = (wm: Option[Long]) => Map("published" -> "false",
       "deltaRows" -> "0", "highWatermark" -> wm.map(_.toString).getOrElse(""))
     val lock = new JobLock(req(p, "state.dir") + "/_locks",
@@ -1142,23 +1177,21 @@ object JobConfig {
     lock.withLock {
       val table = new graft.sink.ShardedTable(outDir, partCol, conf)
       val dataPath = new org.apache.hadoop.fs.Path(s"$outDir/data")
-      val hasCurrent = table.currentVersion.isDefined &&
+      val current = table.currentVersion
+      val hasCurrent = current.isDefined &&
         dataPath.getFileSystem(conf).exists(dataPath)
       // the watermark is meaningful only WITH its data: if the data
       // dirs were deleted, rebuild from the full source rather than
       // silently dropping everything below the orphaned watermark
-      val prior =
-        if (!hasCurrent) None
-        else table.currentMeta.get("highWatermark").filter(_.nonEmpty).map(_.toLong)
-      val srcFs = srcPath.getFileSystem(conf)
-      val srcOpt =
-        if (!srcFs.exists(srcPath)) None
-        else if (!srcFs.listStatus(srcPath).exists { s =>
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }) None
-        else Some(loadSource(spark, p))
-      srcOpt.fold(noop(prior)) { src =>
+      val meta = if (hasCurrent) table.metaOf(current.get) else Map.empty[String, String]
+      val prior = meta.get("highWatermark").filter(_.nonEmpty).map(_.toLong)
+      val fingerprint = sourceFingerprint(conf, p)
+      // the source the current version was committed from, unchanged:
+      // nothing lies past the watermark, so no Spark job is needed
+      if (fingerprint.isEmpty || (hasCurrent && meta.get("sourceFiles") == fingerprint))
+        noop(prior)
+      else {
+        val src = loadSource(spark, p)
         val delta = prior.fold(src)(w => src.filter(col(seqCol).cast("long") > w))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -1178,7 +1211,8 @@ object JobConfig {
               applyDelta(table, hasCurrent, delta, pre)
             try {
               val version = table.commit(merged, touched,
-                Map("highWatermark" -> hw.toString), full = !hasCurrent)
+                Map("highWatermark" -> hw.toString, "sourceFiles" -> fingerprint.get),
+                full = !hasCurrent)
               Map("published" -> "true", "deltaRows" -> deltaRows.toString,
                 "highWatermark" -> hw.toString, "version" -> version.toString,
                 "touchedPartitions" -> touched.size.toString)
@@ -1207,6 +1241,7 @@ object JobConfig {
       taskPolicies = buildTaskPolicies(p),
       sink = (req(p, "sink.staging"), req(p, "sink.output"),
         opt(p, "sink.partitionBy").map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)),
-      quarantineDir = opt(p, "quarantine.dir"))
+      quarantineDir = opt(p, "quarantine.dir"),
+      sourceFingerprint = sourceFingerprint(spark.sparkContext.hadoopConfiguration, p))
   }
 }

@@ -25,6 +25,19 @@ import graft.state.{FsStateStore, StateStore}
   * -once when the sink is partition-overwrite idempotent).
   *
   * Row/byte counters ride the write via `observe()` — no second pass.
+  * The quarantine side-output is staged like the data and published
+  * only with it, so a vetoed run leaves no quarantine rows; an empty
+  * staged write into an existing directory is dropped, not published.
+  *
+  * No-op shortcut: a caller that can fingerprint its source (see
+  * `JobConfig.sourceFingerprint`) passes `sourceFingerprint`, and the
+  * state write after a publish records it as `sourceFiles`. When the
+  * committed record's `sourceFiles` equals it, a watermark exists and
+  * the task policies pass on 0 rows, nothing can lie past the
+  * watermark: the run returns the result a full no-op run returns
+  * (0 rows, the same watermark, published) without starting Spark or
+  * writing state. Without a fingerprint, or against a record that has
+  * none, the run takes the full path.
   */
 object JobRunner {
 
@@ -37,8 +50,14 @@ object JobRunner {
 
   private val WatermarkStore = "watermarks"
 
+  /** The committed watermark; a run that extracted no row committed
+    * `""`, which means none.
+    */
   def lowWatermark(store: StateStore, job: JobSpec): Option[Long] =
-    store.get(WatermarkStore, job.name).flatMap(_.get("watermark")).map(_.toLong)
+    watermarkOf(store.get(WatermarkStore, job.name))
+
+  private def watermarkOf(rec: Option[Map[String, String]]): Option[Long] =
+    rec.flatMap(_.get("watermark")).filter(_.nonEmpty).map(_.toLong)
 
   def run(spark: SparkSession, store: StateStore, job: JobSpec,
       read: SparkSession => DataFrame,
@@ -47,13 +66,30 @@ object JobRunner {
       rowPolicies: Seq[Quality.RowPolicy],
       taskPolicies: Seq[Quality.TaskPolicy],
       sink: (String, String, Seq[String]), // (stagingDir, outputDir, partitionBy)
-      quarantineDir: Option[String] = None): RunResult = {
+      quarantineDir: Option[String] = None,
+      sourceFingerprint: Option[String] = None): RunResult = {
+
+    // 1. plan: incremental range from the committed watermark
+    val committed = store.get(WatermarkStore, job.name)
+    val low = watermarkOf(committed)
+    // the source is what the committed run read: nothing lies past
+    // the watermark, so the run would publish 0 rows — return that
+    // result without starting Spark, unless 0 rows would be vetoed
+    if (sourceFingerprint.isDefined && low.isDefined &&
+        committed.flatMap(_.get("sourceFiles")) == sourceFingerprint &&
+        Quality.checkTask(Map("rows" -> 0L, "quarantined" -> 0L), taskPolicies).isRight)
+      return RunResult(0L, low, 0L, published = true, filesMoved = 0)
 
     val publisher = new Publisher(spark.sparkContext.hadoopConfiguration)
     val spec = SinkSpec(sink._1, sink._2, partitionBy = sink._3)
-
-    // 1. plan: incremental range from the committed watermark
-    val low = lowWatermark(store, job)
+    // the quarantine side-output is staged too, and published only
+    // with the data: a vetoed run leaves no quarantine rows behind.
+    // Its staging dir is a dot-hidden sibling (same filesystem, so the
+    // publish is a rename), not a child that would create the output.
+    val qSpec = quarantineDir.map { d =>
+      val q = new org.apache.hadoop.fs.Path(d)
+      SinkSpec(new org.apache.hadoop.fs.Path(q.getParent, s".${q.getName}.staging").toString, d)
+    }
     val source = read(spark)
     // the high watermark is the max over every row READ, as the
     // extractor watermark is: rows the converters filter or the
@@ -71,14 +107,13 @@ object JobRunner {
     // quarantine side-output first (it reads the pre-filter frame);
     // the count rides the quarantine write via observe() — one pass,
     // same discipline as the main write below
-    val quarantined = checked.quarantined match {
-      case Some(q) if quarantineDir.isDefined =>
+    val quarantined = (checked.quarantined, qSpec) match {
+      case (Some(q), Some(qs)) =>
         val qObs = org.apache.spark.sql.Observation()
-        q.observe(qObs, count(lit(1)).as("rows"))
-          .write.mode("append").parquet(quarantineDir.get)
+        publisher.writeStaged(q.observe(qObs, count(lit(1)).as("rows")), qs)
         qObs.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-      case Some(q) => q.count()
-      case None => 0L
+      case (Some(q), None) => q.count()
+      case (None, _) => 0L
     }
 
     // 4. staged write with observed metrics (single pass — Observation
@@ -93,20 +128,31 @@ object JobRunner {
       case other => other.toString.toLong
     }
 
+    // an empty staged write into an output that already exists is
+    // dropped, not published: it would add a 0-row file per run
+    def publishRows(s: SinkSpec, n: Long): Int = {
+      val out = new org.apache.hadoop.fs.Path(s.outputDir)
+      if (n == 0 && out.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(out)) {
+        publisher.abort(s); 0
+      } else publisher.publish(s)
+    }
+
     // 5. task-level policies gate the publish
     val metrics: Map[String, Any] = Map("rows" -> rows, "quarantined" -> quarantined)
     Quality.checkTask(metrics, taskPolicies) match {
       case Left(failed) =>
         publisher.abort(spec)
+        qSpec.foreach(publisher.abort)
         RunResult(rows, highWm, quarantined, published = false, filesMoved = 0)
       case Right(()) =>
-        val moved = publisher.publish(spec)
+        qSpec.foreach(publishRows(_, quarantined))
+        val moved = publishRows(spec, rows)
         // 6. commit state AFTER publish (watermark correctness on retry)
         val newWm = highWm.orElse(low)
         store.put(WatermarkStore, job.name, Map(
           "watermark" -> newWm.map(_.toString).getOrElse(""),
           "rows_last_run" -> rows.toString,
-          "state" -> "COMMITTED"))
+          "state" -> "COMMITTED") ++ sourceFingerprint.map("sourceFiles" -> _))
         RunResult(rows, newWm, quarantined, published = true, filesMoved = moved)
     }
   }

@@ -172,9 +172,12 @@ final class ShardedTable(val root: String, val partCol: String,
     resolved(version)
       .collect { case (k, v) if k.startsWith("p:") => k.stripPrefix("p:") -> v }
 
-  /** User metadata committed with `version` (watermarks etc.). */
+  /** User metadata committed with `version` (watermarks etc.). `m:`
+    * keys never inherit from a delta record's base, so the raw record
+    * alone holds them: no chain walk.
+    */
   def metaOf(version: Long): Map[String, String] =
-    resolved(version)
+    rawRecord(version)
       .collect { case (k, v) if k.startsWith("m:") => k.stripPrefix("m:") -> v }
 
   /** Zone maps committed with `version`: partition -> column ->
@@ -199,9 +202,6 @@ final class ShardedTable(val root: String, val partCol: String,
           col -> ((byKind("zmin"), byKind("zmax")))
         }
       }
-
-  def currentMeta: Map[String, String] =
-    currentVersion.map(metaOf).getOrElse(Map.empty)
 
   /** Commit `df` as the next version, rewriting ONLY the partitions in
     * `touched`: df must hold the full replacement content for those

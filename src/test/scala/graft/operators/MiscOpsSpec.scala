@@ -37,6 +37,9 @@ class MiscOpsSpec extends SparkSpec {
   }
 
   test("query-execution listener records action metrics") {
+    // deliver the earlier tests' queued events first: the new listener
+    // would receive them, and the poll below would stop before "count"
+    org.apache.spark.graftshim.ListenerBusShim.drain(spark.sparkContext)
     val listener = GraftListener.install(spark)
     try {
       graft.Tables.load(spark, sf(), "nation").count()

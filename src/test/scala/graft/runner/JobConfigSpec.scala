@@ -885,4 +885,138 @@ class JobConfigSpec extends SparkSpec {
     assert(r3("published") == "false" && r3("deltaRows") == "0")
     assert(table.currentVersion.contains(2L))
   }
+
+  /** Land `df` as the single parquet file `dir/name`, replacing any
+    * file of that name.
+    */
+  private def land(df: org.apache.spark.sql.DataFrame, dir: String, name: String): Unit = {
+    val tmp = tmpDir("land") + "/d"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, name),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Rewrite `dir/name` with `df`, keeping its mtime: only the length
+    * tells the two files apart.
+    */
+  private def rewriteSameMtime(df: org.apache.spark.sql.DataFrame, dir: String,
+      name: String): Unit = {
+    val f = java.nio.file.Paths.get(dir, name)
+    val (mtime, len) = (java.nio.file.Files.getLastModifiedTime(f), java.nio.file.Files.size(f))
+    land(df, dir, name)
+    java.nio.file.Files.setLastModifiedTime(f, mtime)
+    assert(java.nio.file.Files.size(f) != len)
+  }
+
+  test("job.type=index: unchanged source, no Spark job; any change reads it") {
+    import spark.implicits._
+    val root = tmpDir("indexnoop")
+    val src = s"$root/src"
+    def props(extra: String = "") = JobConfig.parse(
+      s"""job.type=index
+         |job.name=t_idx_noop
+         |source.path=$src
+         |index.id=doc_id
+         |index.text=text
+         |index.seq=seq
+         |sink.staging=$root/staging
+         |sink.output=$root/idx
+         |state.dir=$root/state
+         |$extra
+         |""".stripMargin)
+    def run(p: java.util.Properties = props()) = sparkJobs(JobConfig.runAny(spark, p))
+    def docs(rows: (Long, Long, String)*) = rows.toDF("doc_id", "seq", "text")
+    def table() = new graft.sink.ShardedTable(s"$root/idx", "shard",
+      spark.sparkContext.hadoopConfiguration)
+    def indexed() = table().readCurrent(spark).select("doc_id").distinct()
+      .as[Long].collect().toSet
+    val noop = (wm: Long) =>
+      Map("published" -> "false", "deltaRows" -> "0", "highWatermark" -> wm.toString)
+
+    land(docs((1L, 1L, "a b"), (2L, 2L, "b c")), src, "a.parquet")
+    assert(run()._1("published") == "true")
+    assert(run() == ((noop(2), 0)), "an unchanged source starts no Spark job")
+    // an added file
+    land(docs((3L, 3L, "c d")), src, "b.parquet")
+    val (r3, j3) = run()
+    assert(j3 > 0 && r3("deltaRows") == "1" && r3("highWatermark") == "3")
+    assert(run() == ((noop(3), 0)))
+    // a file rewritten under the same name with a different length
+    rewriteSameMtime(docs((3L, 3L, "c d"), (4L, 4L, "e f g")), src, "b.parquet")
+    val (r4, j4) = run()
+    assert(j4 > 0 && r4("deltaRows") == "1" && r4("highWatermark") == "4")
+    assert(indexed() == Set(1L, 2L, 3L, 4L))
+    // a changed property reads the source; the old config still matches
+    val (r5, j5) = run(props("job.owner=ops"))
+    assert(j5 > 0 && r5 == noop(4))
+    assert(run() == ((noop(4), 0)))
+    // a version committed without sourceFiles takes the full path
+    val t = table()
+    t.commit(t.readCurrent(spark).limit(0), Nil, Map("highWatermark" -> "4"))
+    val (r6, j6) = run()
+    assert(j6 > 0 && r6 == noop(4))
+    // deleted data dirs: a full rebuild, even from an unchanged source
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root, "idx", "data"))
+      .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    val (r7, j7) = run()
+    assert(j7 > 0 && r7("published") == "true" && r7("deltaRows") == "4")
+    assert(indexed() == Set(1L, 2L, 3L, 4L))
+    assert(run() == ((noop(4), 0)))
+    // a deleted file: read again, nothing lies past the watermark; the
+    // empty delta commits nothing, so the next run reads it again too
+    java.nio.file.Files.delete(java.nio.file.Paths.get(src, "a.parquet"))
+    val (r8, j8) = run()
+    assert(j8 > 0 && r8 == noop(4))
+    assert(run()._2 > 0)
+    assert(indexed() == Set(1L, 2L, 3L, 4L))
+  }
+
+  test("job.type=ingest: unchanged source, no Spark job; any change reads it") {
+    import spark.implicits._
+    val root = tmpDir("ingestnoop")
+    val src = s"$root/src"
+    def props(extra: String = "") = JobConfig.parse(
+      s"""job.name=t_ingest_noop
+         |source.path=$src
+         |source.watermark.column=event_id
+         |policy.row.v.predicate=value >= 0
+         |policy.row.v.type=ERR_FILE
+         |sink.staging=$root/staging
+         |sink.output=$root/out
+         |state.dir=$root/state
+         |quarantine.dir=$root/quarantine
+         |$extra
+         |""".stripMargin)
+    def run(p: java.util.Properties = props()) = sparkJobs(JobConfig.run(spark, p))
+    def events(rows: (Long, Double)*) = rows.toDF("event_id", "value")
+    val noop = (wm: Long) => JobRunner.RunResult(0L, Some(wm), 0L, published = true, 0)
+
+    land(events((1L, 1.0), (2L, -1.0), (3L, 3.0)), src, "a.parquet")
+    val (r1, _) = run()
+    assert(r1.published && r1.rowsWritten == 2 && r1.quarantined == 1)
+    assert(run() == ((noop(3), 0)), "an unchanged source starts no Spark job")
+    // an added file
+    land(events((4L, 4.0)), src, "b.parquet")
+    val (r3, j3) = run()
+    assert(j3 > 0 && r3.rowsWritten == 1 && r3.highWatermark.contains(4L))
+    assert(run() == ((noop(4), 0)))
+    // a file rewritten under the same name with a different length
+    rewriteSameMtime(events((4L, 4.0), (5L, -5.0), (6L, 6.0)), src, "b.parquet")
+    val (r4, j4) = run()
+    assert(j4 > 0 && r4.rowsWritten == 1 && r4.quarantined == 1 && r4.highWatermark.contains(6L))
+    // a changed property, then a deleted file: each reads the source
+    // and publishes nothing; the full no-op run records its listing
+    val (r5, j5) = run(props("job.owner=ops"))
+    assert(j5 > 0 && r5 == noop(6))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(src, "a.parquet"))
+    val (r6, j6) = run()
+    assert(j6 > 0 && r6 == noop(6))
+    assert(run() == ((noop(6), 0)))
+    val out = spark.read.parquet(s"$root/out").as[(Long, Double)].collect().toSet
+    assert(out == Set((1L, 1.0), (3L, 3.0), (4L, 4.0), (6L, 6.0)))
+    assert(spark.read.parquet(s"$root/quarantine").count() == 2)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.runner
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -143,5 +145,94 @@ class JobRunnerSpec extends SparkSpec {
     assert(r2.quarantined === 0L && r2.rowsWritten === 0L)
     assert(r2.highWatermark === Some(top))
     assert(spark.read.parquet(quarantine).count() === r1.quarantined)
+  }
+
+  /** Non-hidden data files under `dir` (0 when it does not exist). */
+  private def dataFiles(dir: String): Int = {
+    val d = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(d)) 0
+    else {
+      val st = java.nio.file.Files.walk(d)
+      try st.iterator.asScala.count { f =>
+        java.nio.file.Files.isRegularFile(f) && !d.relativize(f).iterator.asScala
+          .exists(c => c.toString.startsWith("_") || c.toString.startsWith("."))
+      } finally st.close()
+    }
+  }
+
+  private def runEvents(store: FsStateStore, staging: String, out: String, quarantine: String,
+      taskPolicies: Seq[Quality.TaskPolicy] = Nil, fingerprint: Option[String] = None) =
+    JobRunner.run(spark, store, job, readEvents, "wm", ops = Nil,
+      rowPolicies = Seq(Quality.RowPolicy("low_value", $"value" < 100, Quality.ErrFile)),
+      taskPolicies = taskPolicies, sink = (staging, out, Nil),
+      quarantineDir = Some(quarantine), sourceFingerprint = fingerprint)
+
+  test("a run that extracts no rows commits no watermark; later runs plan") {
+    val (store, staging, out, _) = newEnv()
+    val src = tmpDir("jobrunner_src") + "/events"
+    Seq.empty[(Long, Double)].toDF("event_id", "value").write.parquet(src)
+    def run() = JobRunner.run(spark, store, job, s => s.read.parquet(src), "event_id",
+      ops = Nil, rowPolicies = Nil, taskPolicies = Nil, sink = (staging, out, Nil))
+    val r1 = run()
+    assert(r1.published && r1.rowsWritten == 0 && r1.highWatermark.isEmpty)
+    assert(JobRunner.lowWatermark(store, job).isEmpty)
+    val r2 = run() // threw NumberFormatException on the committed ""
+    assert(r2.published && r2.rowsWritten == 0 && r2.highWatermark.isEmpty)
+    Seq((7L, 1.0)).toDF("event_id", "value").write.mode("append").parquet(src)
+    val r3 = run()
+    assert(r3.rowsWritten == 1 && r3.highWatermark.contains(7L))
+  }
+
+  test("a vetoed run leaves no quarantine rows; a retry quarantines once") {
+    val (store, staging, out, quarantine) = newEnv()
+    val veto = runEvents(store, staging, out, quarantine,
+      taskPolicies = Seq(Quality.TaskPolicy("never", mandatory = true, _ => false)))
+    assert(!veto.published && veto.quarantined > 0)
+    assert(dataFiles(quarantine) == 0, "a vetoed run must publish no quarantine rows")
+    val retry = runEvents(store, staging, out, quarantine)
+    assert(retry.published && retry.quarantined == veto.quarantined)
+    assert(spark.read.parquet(quarantine).count() == retry.quarantined)
+    assert(!new java.io.File(new java.io.File(quarantine).getParent, ".quarantine.staging").exists())
+  }
+
+  test("no-op runs add no files to quarantine or an unpartitioned output") {
+    val (store, staging, out, quarantine) = newEnv()
+    val r1 = runEvents(store, staging, out, quarantine)
+    assert(r1.published && r1.rowsWritten > 0 && r1.quarantined > 0)
+    val files = (dataFiles(out), dataFiles(quarantine))
+    (1 to 2).foreach { _ =>
+      val r = runEvents(store, staging, out, quarantine)
+      assert(r.published && r.rowsWritten == 0 && r.quarantined == 0 && r.filesMoved == 0, s"$r")
+      assert((dataFiles(out), dataFiles(quarantine)) == files)
+    }
+    assert(spark.read.parquet(out).count() == r1.rowsWritten)
+    assert(spark.read.parquet(quarantine).count() == r1.quarantined)
+  }
+
+  test("fingerprint match: no-op result, no Spark job; else the full path") {
+    val (store, staging, out, quarantine) = newEnv()
+    // a record written without a fingerprint: the full path, which records it
+    val r1 = runEvents(store, staging, out, quarantine)
+    val (r2, j2) = sparkJobs(runEvents(store, staging, out, quarantine, fingerprint = Some("f1")))
+    assert(j2 > 0 && r2.published && r2.rowsWritten == 0)
+    assert(store.get("watermarks", job.name).flatMap(_.get("sourceFiles")).contains("f1"))
+    val (r3, j3) = sparkJobs(runEvents(store, staging, out, quarantine, fingerprint = Some("f1")))
+    assert(j3 == 0)
+    assert(r3 == JobRunner.RunResult(0L, r1.highWatermark, 0L, published = true, filesMoved = 0))
+    assert(r3 == r2.copy(filesMoved = 0), "the shortcut returns what a full no-op run returns")
+    val (r4, j4) = sparkJobs(runEvents(store, staging, out, quarantine, fingerprint = Some("f2")))
+    assert(j4 > 0 && r4 == r3)
+    assert(spark.read.parquet(out).count() == r1.rowsWritten)
+  }
+
+  test("fingerprint match: a policy failing on zero rows still vetoes") {
+    val (store, staging, out, quarantine) = newEnv()
+    val nonEmpty = Seq(Quality.TaskPolicy("nonempty", mandatory = true,
+      m => m("rows").asInstanceOf[Long] > 0))
+    val r1 = runEvents(store, staging, out, quarantine, nonEmpty, Some("f1"))
+    assert(r1.published && r1.rowsWritten > 0)
+    val (r2, j2) = sparkJobs(runEvents(store, staging, out, quarantine, nonEmpty, Some("f1")))
+    assert(j2 > 0 && !r2.published && r2.rowsWritten == 0)
+    assert(JobRunner.lowWatermark(store, job) == r1.highWatermark)
   }
 }

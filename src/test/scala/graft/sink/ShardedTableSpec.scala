@@ -63,10 +63,10 @@ class ShardedTableSpec extends SparkSpec {
     val t = new ShardedTable(tmp("shtab") + "/t", "shard", hconf)
     t.commit(Seq((1L, 0)).toDF("id", "shard"), Seq("0"), Map("wm" -> "10"))
     t.commit(Seq((2L, 0)).toDF("id", "shard"), Seq("0"), Map("wm" -> "20"))
-    assert(t.currentMeta("wm") === "20")
+    assert(t.metaOf(t.currentVersion.get)("wm") === "20")
     t.rollback(1L)
     assert(t.currentVersion === Some(1L))
-    assert(t.currentMeta("wm") === "10")
+    assert(t.metaOf(t.currentVersion.get)("wm") === "10")
     assert(t.readCurrent(spark).select("id").as[Long].collect().toSeq === Seq(1L))
     assert(t.history === Seq(1L, 2L))
     // a commit after rollback continues the version sequence
@@ -237,19 +237,8 @@ class ShardedTableSpec extends SparkSpec {
     t.commit(df, Seq("0", "1"))
     t.commit(df.filter(col("shard") === 1), Seq("1"))
     val fresh = new ShardedTable(root, "shard", hconf)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graftshim.ListenerBusShim.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val read = try {
-      val r = fresh.readCurrent(spark)
-      org.apache.spark.graftshim.ListenerBusShim.drain(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get === 0, "opening a version must not launch a schema-inference job")
+    val (read, jobs) = sparkJobs(fresh.readCurrent(spark))
+    assert(jobs === 0, "opening a version must not launch a schema-inference job")
     val inferred = spark.read.parquet(fresh.manifest(2L).values.toSeq.sorted: _*).schema
     assert(read.schema === inferred)
     assert(read.collect().toSet === spark.read.parquet(
